@@ -3,19 +3,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.expressions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // ANSI pinned ON (Spark 4 default, but the correctness gate must
-      // not silently lose it to a default flip or ambient conf): abort
-      // on overflow/bad cast instead of silent-null arithmetic.
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Graft.session(s"local[$cpus]", cpus)
     spark.sparkContext.setLogLevel("WARN")
     // warmup: absorb JVM/codegen/parquet-reader init outside the timed
     // loop so the first query's number measures the query
@@ -55,14 +44,10 @@ object Bench {
     // sink evaluates every output column and writes nothing — the
     // honest consumption. (Discovered round 10; the methodology
     // bridge vs the count()-era artifacts is recorded in BASELINE.md.)
-    // SPARK_GRAFT_CONSUME=count replays the pre-round-10 (hollow)
-    // consumption for methodology-bridge artifacts only
-    val legacyCount = sys.env.get("SPARK_GRAFT_CONSUME").contains("count")
     def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
       val ok = try {
-        val df = fn(spark, sfDir)
-        if (legacyCount) df.count() else df.write.format("noop").mode("overwrite").save()
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         true
       } catch {
         case t: Throwable => System.err.println(s"[bench] $name FAILED: $t"); false

@@ -21,7 +21,9 @@ import graft.pipeline.ZkPipeline
 object Graft {
 
   /** SparkSession with the engine's native expressions registered and
-    * the configs the synthetic tables need. */
+    * the configs the synthetic tables need. The only session builder in
+    * the tree: every main, every spec (through `SparkSpec`) and the
+    * benchmark start here, so they all run under the gate's config. */
   def session(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession = {
     val s = SparkSession.builder()
       .master(master)

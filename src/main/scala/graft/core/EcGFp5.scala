@@ -275,8 +275,6 @@ object EcGFp5 {
     }
     false
   }
-  /** χ(a) = χ_p(Norm(a)): 1 = QR (raw twin of [[F5.legendre]]). */
-  private def legendre5(a: Array[Long]): Long = bpow(normProd5(a, null), (p - 1) >>> 1)
 
   // --------------------------------------------------------- GF(p^5)
   /** element = 5 canonical coefficients, little-endian in z. */

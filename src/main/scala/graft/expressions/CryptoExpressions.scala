@@ -192,8 +192,10 @@ case class MptVerifyExpr(first: Expression, second: Expression, third: Expressio
 /** Session extension wiring (SparkSessionExtensions): registers the
   * native expressions as SQL functions, so
   * `spark.sql("SELECT keccak256(x) ...")` plans the codegen
-  * expression — no UDF in the path. Install with
-  * `.withExtensions(new GraftExtensions)`. */
+  * expression — no UDF in the path, as long as nothing re-registers
+  * one of these names as a UDF (`GraftFunctions.register` registers
+  * only UDF-only names; `CryptoExpressionsSpec` checks every name
+  * below). [[graft.Graft.session]] installs it. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction((

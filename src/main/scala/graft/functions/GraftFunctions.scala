@@ -6,9 +6,12 @@ import org.apache.spark.sql.functions._
 import graft.core._
 
 /** Column-function registry (SURVEY §2.7 F1–F11): the scalar surface of
-  * the engine. Each function wraps a pure kernel from `graft.core` as a
-  * Spark UDF over BinaryType and is also SQL-registered via
-  * [[GraftFunctions.register]].
+  * the engine. Each function wraps a pure kernel from `graft.core`,
+  * either as a native codegen expression from `graft.expressions` or
+  * as a Spark UDF over BinaryType. In SQL, the native expressions are
+  * named by [[graft.expressions.GraftExtensions]] and the UDF-only
+  * functions by [[GraftFunctions.register]]; [[graft.Graft.session]]
+  * installs both.
   *
   * UDFs here sit outside whole-stage codegen; they are deliberately
   * kept *scalar and allocation-light* (no boxing beyond the byte
@@ -145,16 +148,16 @@ object GraftFunctions {
   def blockLeafHash(blockNumber: Column, blockHash: Column, stateRoot: Column): Column =
     blockLeafHashUdf(blockNumber, blockHash, stateRoot)
 
-  /** SQL registration so every function is usable from spark.sql too. */
+  /** SQL registration of the UDF-only functions. The native names
+    * (`keccak256`, `mapping_leaf_hash`, `mapping_leaf_digest`, …) come
+    * from [[graft.expressions.GraftExtensions]]; registering a UDF
+    * under one of them would shadow the codegen expression. */
   def register(spark: SparkSession): Unit = {
-    spark.udf.register("keccak256", (b: Array[Byte]) => Keccak.keccak256(b))
     spark.udf.register("keccak256_hex", (b: Array[Byte]) => Bytes.toHex(Keccak.keccak256(b)))
     spark.udf.register("left_pad32", (b: Array[Byte]) => Bytes.leftPad32(b))
     spark.udf.register("long_to_bytes32", (v: Long) => Bytes.leftPad32(Bytes.beBytes(v, 8)))
     spark.udf.register("mapping_mpt_key", (k: Array[Byte], s: Int) => StorageKey.mappingMptKey(k, s))
     spark.udf.register("rlp_leaf_value", (n: Array[Byte]) => Rlp.extractLeafValue32(n))
     spark.udf.register("header_number", (h: Array[Byte]) => Rlp.headerFields(h).number)
-    spark.udf.register("mapping_leaf_digest", (k: Array[Byte], v: Array[Byte]) => Commitments.mappingLeafDigest(k, v))
-    spark.udf.register("mapping_leaf_hash", (k: Array[Byte], v: Array[Byte]) => Commitments.mappingLeafHash(k, v))
   }
 }

@@ -1,10 +1,10 @@
 package graft.core
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
+
+import graft.SparkSpec
 
 /** The two hamming formulations every SimHash consumer relies on —
   * the oracle's positional CASE chain ([[Hamming.sql32]]) and the hot
@@ -13,22 +13,7 @@ import org.scalacheck.Gen
   * must guarantee recall at threshold 3. Property-tested so a change
   * to either formulation (or the geometry constants) that breaks the
   * agreement fails here, not as an oracle hash mismatch. */
-class HammingSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("hamming-spec")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class HammingSpec extends AnyFunSuite with SparkSpec {
 
   private val sigGen: Gen[String] =
     Gen.listOfN(Hamming.SigBits, Gen.oneOf('0', '1')).map(_.mkString)

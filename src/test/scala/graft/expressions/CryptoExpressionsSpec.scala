@@ -1,10 +1,10 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.ScalaUDF
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSpec
 import graft.core.{Bytes, Commitments, Keccak}
 import graft.functions.GraftFunctions
 
@@ -12,23 +12,7 @@ import graft.functions.GraftFunctions
   * path and the sequential path must agree byte-for-byte, and the SQL
   * registration through SparkSessionExtensions must plan the native
   * expression. */
-class CryptoExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("expr-spec")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class CryptoExpressionsSpec extends AnyFunSuite with SparkSpec {
 
   test("keccak256 expression matches the kernel under whole-stage codegen") {
     val s2 = spark
@@ -103,8 +87,28 @@ class CryptoExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("SQL surface via SparkSessionExtensions plans the native expression") {
     val out = spark.sql("SELECT hex(keccak256(CAST('abc' AS BINARY))) AS h").collect()(0).getString(0)
     assert(out.equalsIgnoreCase(Bytes.toHex(Keccak.keccak256("abc".getBytes))))
-    val plan = spark.sql("SELECT keccak256(CAST('abc' AS BINARY))").queryExecution.analyzed.toString
-    assert(plan.contains("keccak256"))
+    val b = "CAST('abc' AS BINARY)"
+    val native: Map[String, (String, Class[_])] = Map(
+      "keccak256" -> (s"keccak256($b)", classOf[Keccak256Expr]),
+      "mapping_leaf_hash" -> (s"mapping_leaf_hash($b, $b)", classOf[MappingLeafHashExpr]),
+      "mapping_leaf_digest" -> (s"mapping_leaf_digest($b, $b)", classOf[MappingLeafDigestExpr]),
+      "u256_add" -> (s"u256_add($b, $b)", classOf[U256AddExpr]),
+      "u256_mul_div" -> (s"u256_mul_div($b, $b, $b)", classOf[U256MulDivExpr]),
+      "nfc_normalize" -> ("nfc_normalize('abc')", classOf[NfcNormalizeExpr]),
+      "deflate_ratio" -> ("deflate_ratio('abc')", classOf[DeflateRatioExpr]),
+      "simhash128" -> ("simhash128(1L, 2L)", classOf[SimHash128Expr]),
+      "lsh_scale_vec" -> ("lsh_scale_vec(1L, 8)", classOf[LshScaleVecExpr]))
+    // every name the session maps to a graft.expressions class has a row above
+    val injected = spark.catalog.listFunctions().collect()
+      .filter(f => Option(f.className).exists(_.startsWith("graft.expressions.")))
+      .map(_.name).toSet
+    assert(injected == native.keySet, "the names the session maps to graft.expressions classes")
+    native.foreach { case (name, (call, cls)) =>
+      val analyzed = spark.sql(s"SELECT $call").queryExecution.analyzed
+      val exprs = analyzed.expressions.flatMap(_.collect { case e => e })
+      assert(exprs.exists(cls.isInstance), s"$name did not plan ${cls.getSimpleName}:\n$analyzed")
+      assert(!exprs.exists(_.isInstanceOf[ScalaUDF]), s"$name analyzes to a UDF:\n$analyzed")
+    }
   }
 
   test("nfc_normalize folds decomposed forms, codegen and interpreted agree, SQL surface works") {

@@ -1,9 +1,10 @@
 package graft.expressions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** The fused simhash128 kernel vs the unrolled SQL formulation it
   * replaces in dd_scale_10m: word strings from the planted
@@ -13,23 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * native expression is provably the same operator, just rolled into
   * one compact per-row loop (see SimHash128.scala for the JIT-width
   * motivation). */
-class SimHash128Spec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("simhash128-spec")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class SimHash128Spec extends AnyFunSuite with SparkSpec {
 
   private val nWords = graft.core.SimHash128.NWords
 

@@ -1,27 +1,11 @@
 package graft.multimodal
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSpec
 import graft.multimodal.Multimodal.{MediaMeta, MediaRecord}
 
-class MultimodalSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("multimodal-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class MultimodalSpec extends AnyFunSuite with SparkSpec {
 
   test("mapPartitions decode: non-image payloads fall back to the synthetic metadata, schema is typed") {
     val s2 = spark

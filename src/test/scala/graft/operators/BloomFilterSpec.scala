@@ -1,32 +1,18 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** Bloom runtime filter: no false negatives ever, false-positive rate
   * within the sized bound, build is partitioning-invariant (bit-OR
   * merge commutes), membership is codegen-stable, and the prefiltered
   * semi join is exactly the semi join.
   */
-class BloomFilterSpec extends AnyFunSuite with BeforeAndAfterAll {
+class BloomFilterSpec extends AnyFunSuite with SparkSpec {
 
-  private var spark: SparkSession = _
   private val sf = "/root/testdata/sf0.01"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("bloom-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def bytes(s: String): Array[Byte] = s.getBytes("UTF-8")
 

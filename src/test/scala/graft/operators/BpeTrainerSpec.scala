@@ -1,29 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** Distributed BPE training vs a pure-Scala reference trainer with the
   * same tie-break and merge semantics — the Spark loop must reproduce
   * the sequential algorithm exactly.
   */
-class BpeTrainerSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("bpe-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class BpeTrainerSpec extends AnyFunSuite with SparkSpec {
 
   /** sequential reference: same (count desc, left, right) tie-break,
     * same left-to-right non-overlapping merge. */

@@ -2,9 +2,9 @@ package graft.operators
 
 import scala.util.Random
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** Large-star/small-star connected components vs a brute-force
   * union-find on the same edges — the clustering stage of the dedup
@@ -12,22 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * shape (chains stress depth, random graphs stress merging, stars
   * stress the hot-key path).
   */
-class ConnectedComponentsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("cc-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class ConnectedComponentsSpec extends AnyFunSuite with SparkSpec {
 
   /** reference union-find */
   private def unionFind(n: Long, edges: Seq[(Long, Long)]): Map[Long, Long] = {

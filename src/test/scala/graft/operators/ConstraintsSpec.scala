@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSpec
 import graft.pipeline.Fixtures
 
 /** The reference's fixed-depth circuit bound as a dataset constraint:
@@ -12,24 +11,9 @@ import graft.pipeline.Fixtures
   * fixture (2 contracts/block) passes; N: a tightened bound reports
   * exactly the violating groups.
   */
-class ConstraintsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ConstraintsSpec extends AnyFunSuite with SparkSpec {
 
-  private var spark: SparkSession = _
   private val cfg = Fixtures.Cfg()
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("constraints-spec")
-      .withExtensions(new graft.expressions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("state-DB depth bound: fixture passes at 32, every block violates at 1") {
     val storageDb = graft.pipeline.ZkPipeline.storageDb(Fixtures.entries(spark, cfg))

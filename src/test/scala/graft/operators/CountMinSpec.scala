@@ -1,30 +1,16 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** Count-min sketch: one-sided error bound against exact counts, and
   * partitioning invariance (the merge path must commute).
   */
-class CountMinSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CountMinSpec extends AnyFunSuite with SparkSpec {
 
-  private var spark: SparkSession = _
   private val sf = "/root/testdata/sf0.01"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("cms-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def words = spark.read.parquet(s"$sf/documents.parquet")
     .select(explode(split(col("text"), " ")).as("w"))

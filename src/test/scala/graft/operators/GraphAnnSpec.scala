@@ -2,10 +2,10 @@ package graft.operators
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** Graph ANN quality gate, on the sf0.01 embeddings (near-random —
   * the query's best cosine is ≈0.37 against a ≈0.27 background, so
@@ -16,23 +16,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * deterministic (fixed planes, fixed-point scores, id tiebreaks), so
   * the comparison is exact, not statistical.
   */
-class GraphAnnSpec extends AnyFunSuite with BeforeAndAfterAll {
+class GraphAnnSpec extends AnyFunSuite with SparkSpec {
 
-  private var spark: SparkSession = _
   private val sf = "/root/testdata/sf0.01"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("graph-ann-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def ip(a: Array[Long], b: Array[Long]): Long = {
     var s = 0L; var i = 0

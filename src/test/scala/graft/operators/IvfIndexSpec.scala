@@ -1,29 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** IVF ANN: deterministic under seed, and probing a fraction of the
   * lists recovers most of the exact top-k (recall sanity). */
-class IvfIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
+class IvfIndexSpec extends AnyFunSuite with SparkSpec {
 
-  private var spark: SparkSession = _
   private val sf = "/root/testdata/sf0.01"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("ivf-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("IVF probe recall vs exact brute force; assignment is deterministic") {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")

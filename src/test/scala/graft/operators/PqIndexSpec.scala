@@ -1,34 +1,20 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** Product-quantization index: codes must be well-formed and
   * deterministic, the ADC column must equal the driver-side table
   * lookup, and shortlist-then-rerank must recover most of the exact
   * top-k (the quality contract of the compression).
   */
-class PqIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PqIndexSpec extends AnyFunSuite with SparkSpec {
 
-  private var spark: SparkSession = _
   // sf0.01: same 500 embeddings row count as sf0.001, but this draw
   // contains the planted near-dup structure the recall check needs
   private val sf = "/root/testdata/sf0.01"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("pq-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def emb = spark.read.parquet(s"$sf/embeddings.parquet")
 

@@ -2,32 +2,18 @@ package graft.operators
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** The quantizer store must round-trip models bit-exactly (a loaded
   * quantizer routes every vector to the same posting list as the
   * trained one) and version refreshes atomically (latest snapshot
   * wins; old versions stay readable for pinned readers).
   */
-class QuantizerStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
+class QuantizerStoreSpec extends AnyFunSuite with SparkSpec {
 
-  private var spark: SparkSession = _
   private val sf = "/root/testdata/sf0.01"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("quantizer-store-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("IVF + PQ models round-trip bit-exactly; refresh commits a new version") {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")

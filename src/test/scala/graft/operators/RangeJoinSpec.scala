@@ -2,31 +2,16 @@ package graft.operators
 
 import scala.util.Random
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** Binned range join vs the naive cross-join filter — same matches for
   * every bin width (bin choice affects cost only, never results), and
   * interval endpoints are inclusive.
   */
-class RangeJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("range-join-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class RangeJoinSpec extends AnyFunSuite with SparkSpec {
 
   test("matches the naive cross-join filter for several bin widths") {
     val s = spark

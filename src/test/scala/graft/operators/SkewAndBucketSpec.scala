@@ -1,29 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** Scale-path mechanics: salting must not change results; bucketed
   * co-located joins must eliminate the shuffle. */
-class SkewAndBucketSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SkewAndBucketSpec extends AnyFunSuite with SparkSpec {
 
-  private var spark: SparkSession = _
   private val sf = "/root/testdata/sf0.001"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("skew-bucket-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("salted join is row-identical to the plain join") {
     val li = spark.read.parquet(s"$sf/lineitem.parquet").select("l_orderkey", "l_linenumber", "l_quantity")

@@ -1,31 +1,16 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** Z-order key: column expression must equal the reference interleave,
   * and the layout it induces must actually deliver multi-column
   * locality (bounded per-chunk ranges on BOTH dimensions, where a
   * plain sort leaves the trailing dimension unclustered).
   */
-class ZOrderSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("zorder-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class ZOrderSpec extends AnyFunSuite with SparkSpec {
 
   test("column expression equals the reference interleave") {
     val s = spark

@@ -1,5 +1,4 @@
 package graft.pipeline
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Aggregators
@@ -10,10 +9,7 @@ import graft.functions.GraftFunctions._
   * digest-only, merkle-only, and the full build. Print-only. */
 class StorageDbCostProbe extends AnyFunSuite {
   test("storageDb 1M cost decomposition") {
-    val spark = SparkSession.builder().master("local[32]")
-      .withExtensions(new graft.expressions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Graft.session("local[32]", 32)
     spark.sparkContext.setLogLevel("ERROR")
     def entries = Fixtures.entriesScaled(spark, nBlocks = 1000, keysPerBlock = 1000)
     def noop(df: org.apache.spark.sql.DataFrame): Double = {

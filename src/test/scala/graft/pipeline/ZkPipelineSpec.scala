@@ -2,34 +2,19 @@ package graft.pipeline
 
 import java.math.BigInteger
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSpec
 import graft.core.{Bytes, Commitments, U256}
 
 /** Golden cross-check of the Spark pipeline against driver-side
   * pure-kernel recomputation (the reference's native-vs-circuit test
   * strategy, SURVEY §5): every commitment the distributed plan
   * produces must byte-match the sequential fold. */
-class ZkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ZkPipelineSpec extends AnyFunSuite with SparkSpec {
 
-  private var spark: SparkSession = _
   private val cfg = Fixtures.Cfg()
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("zk-pipeline-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("storage DB: distributed count/digest/root match sequential goldens") {
     val got = ZkPipeline.storageDb(Fixtures.entries(spark, cfg))

@@ -1,7 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Regression-proofs the bench CONSUMPTION methodology (BASELINE.md
@@ -15,10 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * kernels; the plan count() evaluates does not. */
 class BenchMethodologySpec extends AnyFunSuite {
   test("count() prunes agg-final kernels; the noop sink does not") {
-    val spark = SparkSession.builder().master("local[2]")
-      .withExtensions(new graft.expressions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Graft.session("local[2]", 2)
     try {
       val entries = graft.pipeline.Fixtures.entriesScaled(spark, nBlocks = 3, keysPerBlock = 4)
       val db = graft.pipeline.ZkPipeline.storageDb(entries)

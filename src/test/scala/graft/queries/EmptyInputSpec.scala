@@ -2,11 +2,9 @@ package graft.queries
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkEntry
+import graft.{SparkEntry, SparkSpec}
 
 /** Empty-input hardening: at 100 TB a selective filter routinely
   * leaves an operator looking at ZERO rows — a whole empty table is
@@ -20,22 +18,12 @@ import graft.SparkEntry
   * queries (`*_scale`, zk pipeline fixtures, mm forges, src round
   * trips) manufacture their own input and are exercised elsewhere.
   */
-class EmptyInputSpec extends AnyFunSuite with BeforeAndAfterAll {
+class EmptyInputSpec extends AnyFunSuite with SparkSpec {
 
-  private var spark: SparkSession = _
   private var emptyDir: String = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("empty-input-spec")
-      .withExtensions(new graft.expressions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    super.beforeAll()
     // same schemas, zero rows
     emptyDir = Files.createTempDirectory("empty-sf").toString
     val src = "/root/testdata/sf0.001"
@@ -45,8 +33,6 @@ class EmptyInputSpec extends AnyFunSuite with BeforeAndAfterAll {
         .write.mode("overwrite").parquet(s"$emptyDir/$t.parquet")
     }
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private val fixtureBacked = Seq(
     "q1_agg", "q2_topk", "q3_join_agg", "q6_filter", "q8_market_share",

@@ -2,31 +2,16 @@ package graft.queries
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** Source-format breadth (S1): the same rows through parquet, CSV and
   * JSON-lines with explicit schemas (no inference — SURVEY §1.2's
   * fixed-schema rule) must agree. */
-class SourcesSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("sources-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class SourcesSpec extends AnyFunSuite with SparkSpec {
 
   test("parquet, CSV and JSONL round-trip the same rows under explicit schemas") {
     val base = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")

@@ -2,36 +2,25 @@ package graft.sources
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSpec
 import graft.core.Bytes
 import graft.pipeline.{Fixtures, ZkPipeline}
 
 /** S1 source connector: EIP-1186 dump → proof rows → ingest-time MPT
   * re-verification, end-to-end against the deterministic fixtures. */
-class Eip1186SourceSpec extends AnyFunSuite with BeforeAndAfterAll {
+class Eip1186SourceSpec extends AnyFunSuite with SparkSpec {
 
-  private var spark: SparkSession = _
   private var dumpDir: String = _
   private val cfg = Fixtures.Cfg()
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("eip1186-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    super.beforeAll()
     dumpDir = Files.createTempDirectory("eip1186dump").toString
     Eip1186Source.writeFixtureDump(spark, dumpDir, cfg)
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("dump roundtrip: explicit-schema read recovers every fixture proof") {
     val rows = Eip1186Source.toProofRows(Eip1186Source.read(spark, dumpDir))

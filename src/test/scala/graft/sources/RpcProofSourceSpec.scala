@@ -1,10 +1,9 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSpec
 import graft.core.{Bytes, StorageKey}
 import graft.pipeline.{Fixtures, ZkPipeline}
 
@@ -13,24 +12,9 @@ import graft.pipeline.{Fixtures, ZkPipeline}
   * path under injected 5xx failures, and RPC-level errors surfacing
   * as rows instead of disappearing.
   */
-class RpcProofSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
+class RpcProofSourceSpec extends AnyFunSuite with SparkSpec {
 
-  private var spark: SparkSession = _
   private val cfg = Fixtures.Cfg()
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("rpc-proof-source-spec")
-      .withExtensions(new graft.expressions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def requests() = Fixtures.entries(spark, cfg)
     .select("block_number", "contract", "mapping_slot", "mapping_key")

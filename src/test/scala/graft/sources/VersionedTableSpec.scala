@@ -2,31 +2,16 @@ package graft.sources
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** Transactional guarantees of the versioned sink: snapshot isolation,
   * optimistic single-winner commits, partition-level copy-on-write
   * (untouched buckets' files inherited, not rewritten), time travel,
   * and vacuum retention. */
-class VersionedTableSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("versioned-table-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class VersionedTableSpec extends AnyFunSuite with SparkSpec {
 
   private def df(rows: Seq[(Long, String, Long)]) = {
     val s2 = spark

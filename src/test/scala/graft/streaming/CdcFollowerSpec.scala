@@ -2,11 +2,10 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSpec
 import graft.sources.VersionedTable
 
 /** CDC follower: the incrementally-maintained view must equal a full
@@ -14,22 +13,7 @@ import graft.sources.VersionedTable
   * deletes, group births and group deaths — and catching up over
   * several pending versions must land on the same state.
   */
-class CdcFollowerSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("cdc-follower-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class CdcFollowerSpec extends AnyFunSuite with SparkSpec {
 
   private def df(rows: Seq[(Long, Long, Double)]) = {
     val s2 = spark

@@ -2,11 +2,11 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 final case class Arrival(id: Long, ts: Timestamp)
 
@@ -19,22 +19,7 @@ final case class Arrival(id: Long, ts: Timestamp)
   * ingest dedup deployable on an unbounded stream: state is
   * O(keys inside the watermark window), not O(all keys ever).
   */
-class DropDupWatermarkSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("dropdup-watermark-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class DropDupWatermarkSpec extends AnyFunSuite with SparkSpec {
 
   private def ts(minute: Int) = new Timestamp(1700000000000L + minute * 60000L)
 

@@ -1,10 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSpec
 import graft.pipeline.{Fixtures, ZkPipeline}
 
 /** Streaming Query2 materialized view: coverage counts maintained
@@ -12,22 +11,7 @@ import graft.pipeline.{Fixtures, ZkPipeline}
   * at end of stream — and must NOT qualify any id before the full
   * range has been witnessed.
   */
-class Query2MvSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("query2-mv-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class Query2MvSpec extends AnyFunSuite with SparkSpec {
 
   test("incremental coverage equals the batch Query2 at end of stream") {
     implicit val sq = spark.sqlContext

@@ -2,11 +2,11 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 final case class Ev(user_id: Long, ts: Timestamp)
 
@@ -15,22 +15,7 @@ final case class Ev(user_id: Long, ts: Timestamp)
   * them into one) and the appended result must equal the batch
   * session_window over the same data.
   */
-class SessionWindowSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("session-window-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class SessionWindowSpec extends AnyFunSuite with SparkSpec {
 
   private def ts(minute: Int) = new Timestamp(1700000000000L + minute * 60000L)
 

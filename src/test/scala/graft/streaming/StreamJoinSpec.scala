@@ -2,11 +2,11 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 final case class Click(click_id: Long, c_user: Long, c_ts: Timestamp)
 final case class Purchase(purchase_id: Long, p_user: Long, p_ts: Timestamp)
@@ -16,22 +16,7 @@ final case class Purchase(purchase_id: Long, p_user: Long, p_ts: Timestamp)
   * produce exactly the batch join's pairs even when the two sides
   * arrive interleaved across micro-batches and out of order.
   */
-class StreamJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("stream-join-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class StreamJoinSpec extends AnyFunSuite with SparkSpec {
 
   private def ts(minute: Int) = new Timestamp(1700000000000L + minute * 60000L)
 

@@ -1,32 +1,16 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** Streaming chunk dedup vs the batch registry query: in-order arrival
   * must be bit-equal to `d22_chunk_dedup`'s first-occurrence rule, and
   * out-of-order arrival must still keep every distinct chunk exactly
   * once globally. */
-class StreamingChunkDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("streaming-chunk-dedup-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class StreamingChunkDedupSpec extends AnyFunSuite with SparkSpec {
 
   private def docs(n: Int): Seq[StreamingChunkDedup.Doc] =
     spark.read.parquet("/root/testdata/sf0.001/documents.parquet")

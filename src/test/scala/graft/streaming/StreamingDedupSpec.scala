@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** Streaming incremental dedup: docs arriving across micro-batches are
   * verdicted against everything that arrived before — exact dups by
@@ -13,22 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * Fixture hammings (md5-derived, deterministic): base vs one-word
   * variant = 1 bit; base vs unrelated text = 12 bits.
   */
-class StreamingDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("streaming-dedup-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class StreamingDedupSpec extends AnyFunSuite with SparkSpec {
 
   private val base = "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo lima " +
     "mike november oscar papa quebec romeo sierra tango uniform victor whiskey xray yankee " +

@@ -1,30 +1,16 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.BeforeAndAfterAll
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** StreamingDrift contract: the profile is additive (any micro-batch
   * split of the same rows yields the same profile and scores), null
   * bins key deterministically, and an unbounded feature fails loudly
   * at the MaxBins ceiling instead of growing driver state with the
   * stream. */
-class StreamingDriftSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("streaming-drift-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class StreamingDriftSpec extends AnyFunSuite with SparkSpec {
 
   private def df(rows: Seq[(Long, String, String)]): DataFrame = {
     val s = spark

@@ -1,10 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** StreamingNearDup contract: exact/near/keep gate semantics in
   * arrival order, verdicts independent of micro-batch boundaries
@@ -15,22 +16,7 @@ object StreamingNearDupSpec {
   final case class ND(doc_id: Long, seq: Long, h: String, simhash: String)
 }
 
-class StreamingNearDupSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("streaming-neardup-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class StreamingNearDupSpec extends AnyFunSuite with SparkSpec {
 
   import StreamingNearDupSpec.ND
 

@@ -1,33 +1,17 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** The streaming training-data pipeline (StreamingPipeline: dedup →
   * gate/mix → incremental packing MV) vs the batch d18 composition:
   * id-ordered ingest across micro-batches must reproduce the batch
   * manifest exactly — including the Σ bin·tokens layout checksum —
   * and the dedup state must stay O(distinct contents). */
-class StreamingPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("streaming-pipeline-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class StreamingPipelineSpec extends AnyFunSuite with SparkSpec {
 
   private def corpus(n: Int): Seq[StreamingPipeline.Doc] =
     spark.read.parquet("/root/testdata/sf0.001/documents.parquet")

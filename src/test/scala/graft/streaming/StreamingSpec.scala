@@ -3,33 +3,17 @@ package graft.streaming
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSpec
 import graft.core.{Bytes, Commitments}
 import graft.pipeline.Fixtures
 
 /** St1–St4 behavior under a real Structured Streaming run
   * (MemoryStream micro-batches → foreachBatch appender). */
-class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("streaming-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class StreamingSpec extends AnyFunSuite with SparkSpec {
 
   private def tmp(prefix: String): String =
     Files.createTempDirectory(prefix).toString

@@ -2,12 +2,11 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSpec
 import graft.operators.IvfIndex
 
 /** Streaming ANN index maintenance: the index must stay probeable
@@ -15,23 +14,9 @@ import graft.operators.IvfIndex
   * stream is fully consumed, a probe must equal the batch IVF probe
   * over the same data with the same quantizer.
   */
-class VectorIndexMaintainerSpec extends AnyFunSuite with BeforeAndAfterAll {
+class VectorIndexMaintainerSpec extends AnyFunSuite with SparkSpec {
 
-  private var spark: SparkSession = _
   private val sf = "/root/testdata/sf0.01"
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("vector-index-maintainer-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("stream-maintained index converges to the batch probe") {
     implicit val sq = spark.sqlContext
